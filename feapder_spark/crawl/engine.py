@@ -1,15 +1,17 @@
 """The crawl engine — iterative DataFrame jobs over snapshot tables.
 
 One driver loop collapses the reference's three spider lifecycles
-(AirSpider/Spider/BatchSpider, SURVEY §3) into:
+(AirSpider/Spider/BatchSpider, SURVEY §3) into one iteration of named
+phases (CrawlEngine._iterate), repeated while the frontier has due rows:
 
-    while frontier has due rows:
-        batch   = politeness-gated top-k of frontier      (lease, S2/O1/O2)
-        fetched = mapInPandas resolve                      (S7)
-        parsed  = mapInPandas span+link extraction         (P5-P9)
-        new     = anti-join(candidate links, seen)         (F1/J1/F7)
-        commit seen+docs+items+failed+frontier+order+metrics as one
-        checkpointed snapshot group                        (B1/B2/K1-K6)
+    _lease           politeness-gated top-k of the frontier      (S2/O1/O2)
+    _fetch_outcome   fused mapInPandas fetch+parse, one rollup   (S7, P5-P9)
+    _claim_links     anti-join(candidate links, seen)            (F1/J1/F7)
+    _route_failures  retry, or park in the failed table
+    _items           item export, deduped on the item fingerprint
+    _commit          seen+docs+items+failed+frontier+order as one
+                     checkpointed snapshot group                 (B1/B2/K1-K6)
+    _maintain        fold the re-read append logs, compact on tombstones
 
 Delivery semantics mirror the reference: at-least-once with
 claim-on-enqueue dedup (request_buffer.py:42-50), priority-ascending lease
@@ -49,15 +51,8 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-import os as _os
-import time as _time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-
-# opt-in phase timing: SPARK_GRAFT_TRACE=1 prints per-iteration phase walls
-# (lease/agg job, claim, commits, checkpoint) — for locating driver-side
-# serial cost; zero overhead when unset
-_TRACE = bool(_os.environ.get("SPARK_GRAFT_TRACE"))
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -112,13 +107,54 @@ FETCH_CACHE_DDL = "fingerprint STRING, status_code INT, content STRING"
 # frontier is adds ⟕anti tombstones on exactly these three columns
 TOMBS_DDL = "fingerprint STRING, retry_times INT, added_iteration INT"
 
-TABLES = [
-    "frontier", "frontier_tombs", "seen", "seen_set", "docs", "items", "failed",
-    "crawl_order", "metrics", "metrics_partitions", "fetch_cache", "robots",
-    "token_buckets",
-]
+# every engine table with its DDL; each checkpoint pins all of them
+TABLE_DDLS = {
+    "frontier": FR.FRONTIER_DDL,
+    "frontier_tombs": TOMBS_DDL,
+    "seen": SEEN_DDL,
+    "seen_set": BloomSeenSet.BLOBS_SCHEMA,
+    "docs": DOCS_DDL,
+    "items": ITEMS_DDL,
+    "failed": FAILED_DDL,
+    "crawl_order": ORDER_DDL,
+    "metrics": METRICS_DDL,
+    "metrics_partitions": PART_METRICS_DDL,
+    "fetch_cache": FETCH_CACHE_DDL,
+    "robots": RB.ROBOTS_DDL,
+    "token_buckets": BUCKETS_DDL,
+}
+TABLES = list(TABLE_DDLS)
+
+# the one in-loop maintenance policy (CrawlEngine._maintain): each append
+# log the loop re-reads folds past cfg.fold_min_segments segments, and
+# segments of TARGET_FILE_BYTES (Iceberg's target file size) or more are
+# never re-folded — seen, fetch_cache and items grow with no compaction
+# reset, so uncapped folds would grow into O(table) pauses.
+FOLDED_LOGS = ("frontier", "frontier_tombs", "seen", "fetch_cache", "items")
+TARGET_FILE_BYTES = 256 << 20
+# the only other in-loop trigger: compact the frontier delta log once its
+# tombstones exceed max(this floor, the visible frontier size)
+COMPACT_MIN_TOMBSTONES = 100_000
 
 _ITEM_KEYS = ["doc_id", "n_spans", "title", "url"]  # sorted, item.py:141-153
+
+
+_SCHEMAS: dict = {}
+
+
+def _schema(ddl: str):
+    """StructType of an engine DDL, parsed once per process (parsing needs
+    an active session, so never at import time)."""
+    if ddl not in _SCHEMAS:
+        from pyspark.sql.types import StructType
+
+        _SCHEMAS[ddl] = StructType.fromDDL(ddl)
+    return _SCHEMAS[ddl]
+
+
+def _cols(ddl: str) -> list[str]:
+    """Column names of an engine DDL, in DDL order."""
+    return [f.name for f in _schema(ddl).fields]
 
 
 def item_fp_col() -> F.Column:
@@ -136,46 +172,16 @@ class CrawlConfig:
     default_parser: str = "TestParser"
     politeness: dict | None = None  # host -> per-iteration budget; "__default__" key
     link_priority: int = S.DEFAULT_PRIORITY
-    # frontier tombstone compaction: fold the delta log back into the adds
-    # table when tombstones exceed max(this floor, visible frontier size)
-    compact_min_tombstones: int = 100_000
-    # ALSO compact when the adds table accumulates this many append segments
-    # (one per commit): on a huge frontier the tombstone threshold fires
-    # rarely, while per-band FILE counts grow with every iteration — this
-    # bounds them independently (Iceberg rewrite_data_files cadence)
-    compact_min_segments: int = 512
     # small-file fold cadence for every append log the loop RE-READS each
-    # iteration — the frontier delta logs (adds/tombs) plus the exact-mode
-    # seen log and the response cache (Iceberg rewrite_data_files
-    # bin-pack, store/snapshot.fold_segments): past this many appended
-    # segments the SMALLEST fold into one — no anti-join, no tombstone
-    # reconciliation, O(bytes-folded) cost, LSM-amortized — so
-    # per-iteration read cost stays O(fold_min_segments) file opens while
-    # compact_frontier's O(visible) rewrite stays reserved for the
-    # tombstone-ratio trigger (at a 10^10 frontier an in-loop full rewrite
-    # is the same unbounded pause compact_items was decoupled for).
-    # seen/fetch_cache grow with no compaction reset, so their folds are
-    # size-capped by items_fold_max_bytes like the items table.
-    # None disables (file counts then bounded by compact_min_segments).
-    fold_min_segments: int | None = 64
-    # items-table minor fold: the items table appends one segment per
-    # flushing iteration FOREVER (no compaction resets it by default —
-    # see items_compact_min_segments), so its bucket-pruned dedup reads
-    # open linearly-growing file counts.  Same bin-pack as the frontier
-    # fold, but SIZE-CAPPED (items_fold_max_bytes, Iceberg's
-    # target-file-size): segments at/above the cap are never re-folded,
-    # so one in-loop fold costs ≤ cap × n_fold even at 10^10 items —
-    # bounded pause, unlike the O(table) compact_items.  None disables.
-    items_fold_min_segments: int | None = 64
-    items_fold_max_bytes: int = 256 << 20
-    # items-table compaction cadence, DECOUPLED from the frontier trigger:
-    # frontier compaction is bounded by the delta log, but compact_items
-    # rewrites the ENTIRE items table — at 10^10 items an in-loop rewrite is
-    # an unbounded O(table) pause inside one crawl iteration.  Default None
-    # = never auto-compact items; run engine.compact_items() out-of-band
-    # (the Iceberg rewrite_data_files maintenance pattern).  Setting an int
-    # re-enables the in-loop segment-count trigger for small deployments.
-    items_compact_min_segments: int | None = None
+    # iteration (FOLDED_LOGS — Iceberg rewrite_data_files bin-pack,
+    # store/snapshot.fold_segments): past this many appended segments the
+    # SMALLEST fold into one — no anti-join, no tombstone reconciliation,
+    # O(bytes-folded) cost, LSM-amortized — so per-iteration read cost
+    # stays O(fold_min_segments) file opens while compact_frontier's
+    # O(visible) rewrite stays reserved for the tombstone-ratio trigger and
+    # compact_items' O(table) rewrite for out-of-band maintenance (at a
+    # 10^10-row table an in-loop full rewrite is an unbounded pause).
+    fold_min_segments: int = 64
     # visible-set anti-join shape (the co-partitioning seam, VERDICT r4 #5):
     # when the tombstone delta log is at most this many rows, broadcast the
     # tombstone side — the adds side then never shuffles for visibility
@@ -287,6 +293,51 @@ class IterationStats:
     links_dropped: int = 0  # robots-disallowed candidates (not dups)
 
 
+@dataclass
+class _Iteration:
+    """One crawl iteration's working set, handed from phase to phase
+    (CrawlEngine._iterate; _enqueue uses its claim fields).  ``release``
+    unpersists every frame ``keep`` persisted — once, from a ``finally``,
+    so a failed commit leaves nothing cached."""
+
+    # lease: gate budgets (None = ungated), token buckets before/after accrual
+    budgets: object = None
+    bucket_state: DataFrame | None = None
+    accrued: DataFrame | None = None
+    batch: DataFrame | None = None
+    # fetch: fetch+parse output and the stats row (links_* set at commit)
+    fetched: DataFrame | None = None
+    st: IterationStats | None = None
+    links_total: int = 0
+    cache_new: int = 0
+    part_metrics: list = field(default_factory=list)
+    # claim: new rows, deferred seen write, counts, TTL-shadowed rows
+    new_rows: DataFrame | None = None
+    seen_commit: object = lambda n_bound, iteration: None  # noqa: E731
+    links_obs: Observation | None = None
+    kept_obs: Observation | None = None
+    stale: DataFrame | None = None
+    n_stale: int = 0
+    # failure routing and items
+    retries: DataFrame | None = None
+    failed_new: DataFrame | None = None
+    items_new: DataFrame | None = None
+    cached: list = field(default_factory=list)
+
+    @property
+    def parsed(self) -> DataFrame:
+        return self.fetched.filter(F.col("status_code") == 200)
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        self.cached.append(df.persist())
+        return df
+
+    def release(self) -> None:
+        for df in self.cached:
+            df.unpersist()
+        self.cached.clear()
+
+
 class CrawlEngine:
     def __init__(self, spark: SparkSession, warehouse: str, resolver, config: CrawlConfig | None = None):
         self.spark = spark
@@ -310,9 +361,11 @@ class CrawlEngine:
         self._buckets = (
             TokenBuckets(tb["rate"], tb["burst"], tb.get("hosts")) if tb else None
         )
-        if self.cfg.seen_set == "bloom" and (
+        # an expiring seen set: TTL re-claims can shadow still-visible rows
+        self._ttl_mode = (
             self.cfg.seen_ttl_iterations is not None or self.cfg.seen_ttl_seconds is not None
-        ):
+        )
+        if self.cfg.seen_set == "bloom" and self._ttl_mode:
             # the reference offers BloomFilter XOR ExpireFilter for the same
             # reason: bloom bits cannot expire (dedup/__init__.py)
             raise ValueError("seen-set TTL requires seen_set='exact' (Bloom bits cannot expire)")
@@ -352,24 +405,31 @@ class CrawlEngine:
     # O(log n + k) per take (redisdb.py:472-523): never a full scan of a
     # 10^10-row frontier to lease 10^6 rows.
 
-    def _commit_frontier_adds(self, df: DataFrame, n_bound: int, mode: str = "append") -> None:
+    def _commit_banded(self, name: str, df: DataFrame, n_bound: int, mode: str) -> None:
+        """Append (or overwrite) one frontier delta log, banded on the
+        rows' priority; a tombstone row keeps only its TOMBS_DDL key."""
+        banded = df.withColumn("band", F.col("priority"))
+        if name == "frontier_tombs":
+            banded = banded.drop("priority")
         # bands are LOW cardinality (often one), so the pre-write sizing is a
         # narrow coalesce — no shuffle, ≤ target files per band (hashing on
         # the band would collapse a one-band mega-batch into a single task)
-        self.t("frontier").commit_append_partitioned(
-            df.withColumn("band", F.col("priority")), "band",
-            coalesce_to=self._target(n_bound), count_rows=True, mode=mode,
+        self.t(name).commit_append_partitioned(
+            banded, "band", coalesce_to=self._target(n_bound), count_rows=True, mode=mode,
         )
 
-    def _commit_frontier_tombs(self, df_with_priority: DataFrame, n_bound: int,
-                               mode: str = "append") -> None:
-        self.t("frontier_tombs").commit_append_partitioned(
-            df_with_priority.withColumn("band", F.col("priority")).drop("priority"),
-            "band", coalesce_to=self._target(n_bound), count_rows=True, mode=mode,
-        )
+    def _commit_frontier_adds(self, df: DataFrame, n_bound: int, mode: str = "append") -> None:
+        self._commit_banded("frontier", df, n_bound, mode)
 
-    def _empty_tombs(self) -> DataFrame:
-        return self.spark.createDataFrame([], TOMBS_DDL + ", priority INT")
+    def _rewrite_frontier(self, visible: DataFrame, n_bound: int) -> None:
+        """adds := ``visible``, tombstones := ∅ (compaction, or truncating
+        a drained frontier before re-seeding)."""
+        self._commit_frontier_adds(visible, n_bound, mode="overwrite")
+        self._commit_banded(
+            "frontier_tombs", self.spark.createDataFrame([], TOMBS_DDL + ", priority INT"),
+            0, "overwrite",
+        )
+        self.tombstone_rows = 0
 
     def _band_plan(self) -> list[tuple[str, int]] | None:
         """Ordered ``(band_key, visible_rows)`` for every band with visible
@@ -380,25 +440,11 @@ class CrawlEngine:
         am = self.t("frontier").manifest()
         if am is None or am.partitions:
             return None
-        ameta = am.meta or {}
-        adds_rows = ameta.get("part_rows")
-        if (
-            adds_rows is None
-            or not ameta.get("part_rows_complete", True)
-            or any(s not in (am.seg_parts or {}) for s in am.segments)
-        ):
-            return None
-        tomb_rows = {}
+        adds_rows = self._band_rows(am)
         tm = self.t("frontier_tombs").manifest()
-        if tm is not None and tm.segments:
-            tmeta = tm.meta or {}
-            tomb_rows = tmeta.get("part_rows")
-            if (
-                tomb_rows is None
-                or not tmeta.get("part_rows_complete", True)
-                or any(s not in (tm.seg_parts or {}) for s in tm.segments)
-            ):
-                return None
+        tomb_rows = self._band_rows(tm) if tm is not None and tm.segments else {}
+        if adds_rows is None or tomb_rows is None:
+            return None
         try:
             ordered = sorted(adds_rows, key=int)
         except (ValueError, TypeError):
@@ -416,6 +462,20 @@ class CrawlEngine:
                 plan.append((band, visible))
         return plan
 
+    @staticmethod
+    def _band_rows(m) -> dict | None:
+        """Per-band row counts from a banded delta log's manifest meta;
+        None when they can't be trusted (count gaps, unbanded segments)."""
+        meta = m.meta or {}
+        rows = meta.get("part_rows")
+        if (
+            rows is None
+            or not meta.get("part_rows_complete", True)
+            or any(s not in (m.seg_parts or {}) for s in m.segments)
+        ):
+            return None
+        return rows
+
     def _lease_band_keys(self, k: int) -> list[str] | None:
         """Priority bands whose visible rows provably cover the next top-k
         lease, lowest priority first; None ⇒ read the whole frontier.
@@ -423,8 +483,12 @@ class CrawlEngine:
         priority than the k-th row of the read bands, so the global top-k
         over the read subset equals the top-k over the full frontier."""
         plan = self._band_plan()
-        if plan is None:
-            return None
+        return None if plan is None else self._cover(plan, k)[0]
+
+    @staticmethod
+    def _cover(plan: list[tuple[str, int]], k: int) -> tuple[list[str], int]:
+        """The lowest bands of ``plan`` whose visible rows sum to ≥ ``k``
+        (every band when they never do), and that visible-row sum."""
         keys: list[str] = []
         cum = 0
         for band, visible in plan:
@@ -432,31 +496,20 @@ class CrawlEngine:
             cum += visible
             if cum >= k:
                 break
-        return keys
+        return keys, cum
 
     def _read_frontier_due(self, band_keys: list[str] | None = None) -> DataFrame:
-        """Visible due (status=todo) rows; ``band_keys`` restricts the read
-        to those hive partitions on BOTH sides of the delta log (the
-        band-subset anti-join is self-contained: a tombstone lands in the
-        same band as the add it cancels)."""
-        if band_keys is None:
-            due = self._read_frontier()
-        else:
-            adds = self._backfill_columns(
-                self.t("frontier").read_partition_subset(band_keys), FR.FRONTIER_DDL
-            )
-            tombs = self._tombs_side(self.t("frontier_tombs").read_partition_subset(band_keys))
-            due = adds.join(
-                tombs, on=["fingerprint", "retry_times", "added_iteration"], how="left_anti"
-            )
-        return due.filter(F.col("status") == S.STATUS_TODO)
+        """Visible due (status=todo) rows, optionally band-restricted."""
+        return self._read_frontier(band_keys).filter(F.col("status") == S.STATUS_TODO)
 
-    def _gated_lease_inputs(self, k: int, static_budgets):
-        """Band-pruned read for the politeness-GATED lease (host budgets,
-        robots crawl-delay, token buckets) — incremental band opening
-        (VERDICT r4 #1): open the lowest bands covering ``k`` visible rows;
-        if the gate leaves fewer than k eligible rows, quadruple the
-        coverage and retry, worst case degrading to today's full read.
+    def _lease_inputs(self, it: _Iteration, k: int):
+        """Band-pruned lease read: open the lowest bands covering ``k``
+        visible rows (_lease_band_keys).  Ungated, the top-k lease provably
+        lives there.  The politeness-GATED lease (host budgets, robots
+        crawl-delay, token buckets) opens bands incrementally (VERDICT r4
+        #1): a gate can promote higher bands, so if it leaves fewer than k
+        eligible rows, quadruple the coverage and retry, worst case
+        degrading to a full read — never an unconditional O(frontier) read.
 
         Soundness: per-host rank order is (priority, fingerprint) and bands
         are disjoint priority ranges, so a row's host-rank — hence its
@@ -472,79 +525,60 @@ class CrawlEngine:
         semantics — min(burst, t + m·rate) composes across skipped
         iterations, so lazy catch-up accrual is exact; oracle.py mirrors).
 
-        Returns ``(due, budgets, accrued, bucket_state, opened_keys,
-        bcast_ok)`` — ``accrued``/``bucket_state`` are None without token
-        buckets; ``opened_keys`` is None on the full-read fallback;
-        ``bcast_ok`` says whether the budgets frame may be force-broadcast
-        (_budgets_bcast_ok over the opened subset's row bound).  The total read
-        across retries is ≤ 2× the final subset (geometric growth), and the
-        common case (budgets gate little) is ONE probe over O(k) rows.
+        Reads the static budgets from ``it.budgets`` and, with token
+        buckets, replaces them by the merged budgets, setting
+        ``it.bucket_state`` and ``it.accrued`` (persisted through the
+        record).  Returns ``(due, opened_keys, bcast_ok)`` —
+        ``opened_keys`` is None on the full-read fallback; ``bcast_ok``
+        says whether the budgets frame may be force-broadcast
+        (_budgets_bcast_ok over the opened subset's row bound).  The total
+        read across retries is ≤ 2× the final subset (geometric growth),
+        and the common case (budgets gate little) is ONE probe over O(k)
+        rows.
         """
-        bucket_state = (
-            self.t("token_buckets").read() if self._buckets is not None else None
-        )
+        gated = it.budgets is not None or self._buckets is not None
+        static_budgets = it.budgets
+        if self._buckets is not None:
+            it.bucket_state = self.t("token_buckets").read()
 
-        def budget_inputs(due):
-            if self._buckets is None:
-                return static_budgets, None
-            accrued = self._buckets.accrue(
-                self.spark, bucket_state, due.select("host"), self.iteration
-            ).persist()
-            merged = FR.merge_budgets(
-                static_budgets, self._default_budget, TokenBuckets.budgets(accrued)
-            )
-            return merged, accrued
+        def probe(keys, opened_rows):
+            due = self._read_frontier_due(keys)
+            if self._buckets is not None:
+                it.accrued = it.keep(self._buckets.accrue(
+                    self.spark, it.bucket_state, due.select("host"), self.iteration
+                ))
+                it.budgets = FR.merge_budgets(
+                    static_budgets, self._default_budget, TokenBuckets.budgets(it.accrued)
+                )
+            return due, self._budgets_bcast_ok(opened_rows)
 
         plan = self._band_plan()
-        if not plan:  # None (can't bound) or empty (drained) — read whole
-            due = self._read_frontier_due()
-            budgets, accrued = budget_inputs(due)
-            return due, budgets, accrued, bucket_state, None, self._budgets_bcast_ok(None)
+        if plan is None:  # the manifests can't bound the lease — read whole
+            due, bcast_ok = probe(None, None)
+            return due, None, bcast_ok
         total = sum(v for _, v in plan)
         cover = k
         while True:
-            keys, cum = [], 0
-            for band, visible in plan:
-                keys.append(band)
-                cum += visible
-                if cum >= cover:
-                    break
-            due = self._read_frontier_due(keys)
-            budgets, accrued = budget_inputs(due)
-            bcast_ok = self._budgets_bcast_ok(cum)
-            if cum >= total:
-                # every non-empty band opened — nothing left to probe for
-                return due, budgets, accrued, bucket_state, keys, bcast_ok
+            keys, cum = self._cover(plan, cover)
+            due, bcast_ok = probe(keys, cum)
+            if not gated or cum >= total:
+                # ungated, or every non-empty band opened — nothing to probe
+                return due, keys, bcast_ok
             n_eligible = (
                 FR.eligible_under_politeness(
-                    due, budgets, self._default_budget, self._budget_cap(), bcast_ok
+                    due, it.budgets, self._default_budget, self._budget_cap(), bcast_ok
                 )
                 .limit(k)
                 .count()
             )
             if n_eligible >= k:
-                return due, budgets, accrued, bucket_state, keys, bcast_ok
-            if accrued is not None:
-                accrued.unpersist()
+                return due, keys, bcast_ok
+            if it.accrued is not None:
+                it.accrued.unpersist()
             cover = max(cover * 4, cum + 1)
 
     def _init_tables(self):
-        ddls = {
-            "frontier": FR.FRONTIER_DDL,
-            "frontier_tombs": TOMBS_DDL,
-            "seen": SEEN_DDL,
-            "docs": DOCS_DDL,
-            "items": ITEMS_DDL,
-            "failed": FAILED_DDL,
-            "crawl_order": ORDER_DDL,
-            "metrics": METRICS_DDL,
-            "metrics_partitions": PART_METRICS_DDL,
-            "seen_set": BloomSeenSet.BLOBS_SCHEMA,
-            "fetch_cache": FETCH_CACHE_DDL,
-            "robots": RB.ROBOTS_DDL,
-            "token_buckets": BUCKETS_DDL,
-        }
-        for name, ddl in ddls.items():
+        for name, ddl in TABLE_DDLS.items():
             if not self.t(name).exists():
                 self.t(name).create_empty(ddl)
         self._check_bloom_modulus()
@@ -576,11 +610,36 @@ class CrawlEngine:
         # tombstones (whose row-version keys restart with a fresh engine's
         # iteration counter) can never shadow the new seed rows
         if self.t("frontier_tombs").read().limit(1).count() > 0:
-            self._commit_frontier_adds(
-                self.spark.createDataFrame([], FR.FRONTIER_DDL), 0, mode="overwrite"
-            )
-            self._commit_frontier_tombs(self._empty_tombs(), 0, mode="overwrite")
-            self.tombstone_rows = 0
+            self._rewrite_frontier(self.spark.createDataFrame([], FR.FRONTIER_DDL), 0)
+        self.frontier_size = 0
+        self._enqueue(seeds)
+        return True
+
+    def _label(self, **extra) -> dict:
+        return {
+            "iteration": self.iteration,
+            "next_seq": self.next_seq,
+            "frontier_size": self.frontier_size,
+            "tombstone_rows": self.tombstone_rows,
+            "robots_rows": self.robots_rows,
+            **extra,
+        }
+
+    def frontier(self) -> DataFrame:
+        """Public accessor for the visible frontier."""
+        return self._read_frontier()
+
+    def add_requests(self, seeds: list[dict]) -> int:
+        """Mid-crawl request injection (S6 — the reference Spider's standing
+        seed-table pull / TaskSpider distribute_task, spider.py start-request
+        loop): claim-on-enqueue dedup against the live seen set, append the
+        survivors to the frontier, checkpoint.  Returns requests added."""
+        self._init_tables()
+        return self._enqueue(seeds)
+
+    def _request_candidates(self, seeds: list[dict]) -> DataFrame:
+        """Frontier candidate rows for driver-side request dicts,
+        robots-filtered when enabled."""
         rows = []
         for s in seeds:
             data = s.get("data")
@@ -612,98 +671,32 @@ class CrawlEngine:
         )
         if self.cfg.respect_robots:
             cands = self._apply_robots(cands)
-        # the frontier is empty here (checked above), so stale_tombs is empty
-        new_rows, seen_commit, _obs, _stale = self._claim_new(cands)
-        n_seeded = new_rows.count()
-        self.frontier_size = n_seeded
-        self._commit_frontier_adds(new_rows, n_seeded)
-        seen_commit(n_seeded, self.iteration)
-        if self._bloom is not None:
-            self._bloom.release()
-        self.store.checkpoint(self._label(), TABLES)
-        new_rows.unpersist()
-        return True
+        return cands
 
-    @staticmethod
-    def _frontier_cols():
-        return [
-            "fingerprint", "url", "url_canon", "host", "priority", "retry_times",
-            "parser_name", "status", "added_iteration", "method", "payload",
-            "callback", "auto_request",
-        ]
-
-    def _label(self, **extra) -> dict:
-        label = {
-            "iteration": self.iteration,
-            "next_seq": self.next_seq,
-            "frontier_size": self.frontier_size,
-            "tombstone_rows": self.tombstone_rows,
-            "robots_rows": self.robots_rows,
-        }
-        label.update(extra)
-        return label
-
-    def frontier(self) -> DataFrame:
-        """Public accessor for the visible frontier."""
-        return self._read_frontier()
-
-    def add_requests(self, seeds: list[dict]) -> int:
-        """Mid-crawl request injection (S6 — the reference Spider's standing
-        seed-table pull / TaskSpider distribute_task, spider.py start-request
-        loop): claim-on-enqueue dedup against the live seen set, append the
-        survivors to the frontier, checkpoint.  Returns requests added."""
-        self._init_tables()
-        rows = []
-        for s in seeds:
-            data = s.get("data")
-            fp_pre = request_fingerprint(s["url"], data=data) if data else None
-            rows.append(
-                (
-                    s["url"], int(s.get("priority", S.DEFAULT_PRIORITY)),
-                    s.get("parser_name", self.cfg.default_parser),
-                    s.get("method"), data, fp_pre, s.get("callback"),
-                    bool(s.get("auto_request", True)),
-                )
-            )
-        df = self.spark.createDataFrame(
-            rows,
-            "url STRING, priority INT, parser_name STRING, method STRING, "
-            "payload MAP<STRING, STRING>, fp_pre STRING, callback STRING, "
-            "auto_request BOOLEAN",
-        )
-        cands = (
-            df.withColumn("url_canon", canonicalize_udf("url"))
-            .withColumn("fingerprint", F.coalesce(F.col("fp_pre"), F.md5("url_canon")))
-            .drop("fp_pre")
-            .withColumn("host", F.lower(F.coalesce(F.parse_url("url_canon", F.lit("HOST")), F.lit(""))))
-            .withColumn("retry_times", F.lit(0))
-            .withColumn("added_iteration", F.lit(self.iteration))
-        )
-        if self.cfg.respect_robots:
-            cands = self._apply_robots(cands)
-        new_rows, seen_commit, _obs, stale = self._claim_new(cands)
-        n_new = new_rows.count()
-        n_stale = 0
-        if n_new:
-            if stale is not None:
-                # TTL re-claims replace their stale visible rows (oracle's
-                # dict-keyed frontier): tombstone BEFORE appending
-                stale = stale.persist()
-                n_stale = stale.count()
-                if n_stale:
-                    self._commit_frontier_tombs(stale, n_stale)
-                    self.tombstone_rows += n_stale
-                stale.unpersist()
-            self._commit_frontier_adds(new_rows, n_new)
-        seen_commit(n_new, self.iteration)  # no-op write at 0; releases caches
-        if self._bloom is not None:
-            self._bloom.release()
-        self.frontier_size += n_new - n_stale
+    def _enqueue(self, seeds: list[dict]) -> int:
+        """Claim the requests against the seen set, append the survivors
+        to the frontier and checkpoint (seed and add_requests)."""
+        it = _Iteration()
+        try:
+            self._claim_new(it, self._request_candidates(seeds))
+            n_new = it.new_rows.count()
+            if n_new:
+                if it.stale is not None:
+                    # TTL re-claims replace their stale visible rows (oracle's
+                    # dict-keyed frontier): tombstone BEFORE appending
+                    it.n_stale = it.keep(it.stale).count()
+                    if it.n_stale:
+                        self._commit_banded("frontier_tombs", it.stale, it.n_stale, "append")
+                        self.tombstone_rows += it.n_stale
+                self._commit_frontier_adds(it.new_rows, n_new)
+            it.seen_commit(n_new, self.iteration)  # no-op write at 0
+        finally:
+            it.release()
+            if self._bloom is not None:
+                self._bloom.release()
+        self.frontier_size += n_new - it.n_stale
         self.store.checkpoint(self._label(added_requests=n_new), TABLES)
-        new_rows.unpersist()
         return n_new
-
-    _schema_cache: dict = {}
 
     def _backfill_columns(self, df: DataFrame, ddl: str) -> DataFrame:
         """Schema evolution on read (Iceberg add-column parity): columns the
@@ -712,14 +705,8 @@ class CrawlEngine:
         unresolved-column errors on the first select (the manifests of old
         commits pin the old schema_ddl).  NULL callback means no callback;
         NULL auto_request reads as true at every consumer."""
-        want = CrawlEngine._schema_cache.get(ddl)
-        if want is None:
-            from pyspark.sql.types import StructType
-
-            want = StructType.fromDDL(ddl)
-            CrawlEngine._schema_cache[ddl] = want
         have = set(df.columns)
-        missing = [f for f in want.fields if f.name not in have]
+        missing = [f for f in _schema(ddl).fields if f.name not in have]
         for f in missing:
             df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
         return df
@@ -735,17 +722,24 @@ class CrawlEngine:
             return F.broadcast(tombs)
         return tombs
 
-    def _read_frontier(self) -> DataFrame:
+    def _read_frontier(self, band_keys: list[str] | None = None) -> DataFrame:
         """Visible frontier = adds ⟕anti tombstones on the row-version key.
         On Iceberg both sides bucket by fingerprint, making this a
         storage-partitioned join (no shuffle); here the tombstone side
         broadcasts below cfg.tombs_broadcast_max_rows (no shuffle either
         way on the adds side), else a plain anti-join whose shuffle is
-        bounded by the delta-log size between compactions."""
-        adds = self._backfill_columns(self.t("frontier").read(), FR.FRONTIER_DDL)
-        tombs = self._tombs_side(self.t("frontier_tombs").read())
-        return adds.join(
-            tombs, on=["fingerprint", "retry_times", "added_iteration"], how="left_anti"
+        bounded by the delta-log size between compactions.  ``band_keys``
+        restricts the read to those hive partitions on BOTH sides (the
+        band-subset anti-join is self-contained: a tombstone lands in the
+        same band as the add it cancels)."""
+        adds, tombs = self.t("frontier"), self.t("frontier_tombs")
+        if band_keys is None:
+            adds, tombs = adds.read(), tombs.read()
+        else:
+            adds = adds.read_partition_subset(band_keys)
+            tombs = tombs.read_partition_subset(band_keys)
+        return self._backfill_columns(adds, FR.FRONTIER_DDL).join(
+            self._tombs_side(tombs), on=_cols(TOMBS_DDL), how="left_anti",
         )
 
     def _apply_robots(self, cands):
@@ -808,22 +802,23 @@ class CrawlEngine:
             bound += opened_rows if opened_rows is not None else self.frontier_size
         return bound <= self.cfg.budgets_broadcast_max_rows
 
-    def _claim_new(self, cands, add_version: int | None = None):
+    def _claim_new(self, it: _Iteration, cands, add_version: int | None = None) -> None:
         """Claim-on-enqueue dedup, exact or Bloom path.
 
         ``add_version`` is the ``added_iteration`` value the candidate rows
         carry (defaults to the current iteration) — the TTL stale logic needs
         it to recognize row-version-key collisions.
 
-        Returns (new_rows_df_persisted, seen_commit_fn, observation,
-        stale_tombs) — the commit fn is run with the iteration's other table
-        commits; the Observation carries count(new_rows) as a free by-product
-        of whichever commit job materializes the frame FIRST (no dedicated
-        count() job — one less fixed-cost Spark job per iteration).  Exact
-        path: anti-join vs the fingerprint table (J1).  Bloom path: cogrouped
-        check+add over the bucketed blobs (only touched buckets move).
+        Sets ``it.new_rows`` (persisted), ``it.seen_commit``,
+        ``it.links_obs`` and ``it.stale`` — the seen commit runs with the
+        iteration's other table commits; the Observation carries
+        count(new_rows) as a free by-product of whichever commit job
+        materializes the frame FIRST (no dedicated count() job — one less
+        fixed-cost Spark job per iteration).  Exact path: anti-join vs the
+        fingerprint table (J1).  Bloom path: cogrouped check+add over the
+        bucketed blobs (only touched buckets move).
 
-        ``stale_tombs`` (TTL mode only, else None): with an expiring seen set
+        ``it.stale`` (TTL mode only, else None): with an expiring seen set
         a fingerprint can be RE-claimed while its original frontier row is
         still visible (politeness-starved, never leased) — the oracle's
         dict-keyed frontier REPLACES that row on re-claim, so the engine
@@ -832,7 +827,15 @@ class CrawlEngine:
         """
         if add_version is None:
             add_version = self.iteration
-        obs = Observation()
+        it.links_obs = Observation()
+
+        def frontier_rows(claimed: DataFrame) -> DataFrame:
+            return it.keep(
+                claimed.withColumn("status", F.lit(S.STATUS_TODO))
+                .select(*_cols(FR.FRONTIER_DDL))
+                .observe(it.links_obs, F.count(F.lit(1)).alias("n_new"))
+            )
+
         if self._bloom is None:
             seen_df = self.t("seen").read()
             if self.cfg.seen_ttl_iterations is not None:
@@ -844,20 +847,14 @@ class CrawlEngine:
                 )
             if self.cfg.seen_ttl_seconds is not None:
                 seen_df = prune_expired(seen_df, self.cfg.seen_ttl_seconds)
-            ttl_mode = (
-                self.cfg.seen_ttl_iterations is not None
-                or self.cfg.seen_ttl_seconds is not None
-            )
             base_new = dedup_new(cands, seen_df, order_cols=("priority", "url"))
             vis = None
-            if ttl_mode:
+            if self._ttl_mode:
                 # visible-frontier snapshot, pinned pre-iteration (manifest
                 # resolved at DataFrame construction) — TTL is an
                 # exact-set-only mode, so this extra read rides the iteration
                 # only when the user opted into expiry
-                vis = self._read_frontier().select(
-                    "fingerprint", "retry_times", "added_iteration", "priority"
-                )
+                vis = self._read_frontier().select(*_cols(TOMBS_DDL), "priority")
                 # a TTL re-claim whose still-visible row has the SAME
                 # row-version key the new append would get ((fp, 0,
                 # add_version) — two add_requests for one URL within one
@@ -870,20 +867,13 @@ class CrawlEngine:
                     & (F.col("added_iteration") == add_version)
                 ).select("fingerprint")
                 base_new = base_new.join(colliding, on="fingerprint", how="left_anti")
-            new_rows = (
-                base_new
-                .withColumn("status", F.lit(S.STATUS_TODO))
-                .select(*self._frontier_cols())
-                .observe(obs, F.count(F.lit(1)).alias("n_new"))
-                .persist()
-            )
-            stale_tombs = None
-            if ttl_mode:
+            it.new_rows = new_rows = frontier_rows(base_new)
+            if self._ttl_mode:
                 # visible rows shadowed by a TTL re-claim (the oracle's
                 # dict-keyed frontier replaces them); same-key rows were
                 # already excluded from new_rows above, so every stale row
                 # here tombstones distinctly
-                stale_tombs = vis.filter(
+                it.stale = vis.filter(
                     (F.col("retry_times") != 0)
                     | (F.col("added_iteration") != add_version)
                 ).join(new_rows.select("fingerprint"), on="fingerprint", how="left_semi")
@@ -903,7 +893,8 @@ class CrawlEngine:
                     mode="append",
                 )
 
-            return new_rows, commit_fn, obs, stale_tombs
+            it.seen_commit = commit_fn
+            return
 
         # FUSED Bloom claim (one cogroup, one shuffle per side): in-batch
         # first-dedup + membership check + insert happen inside the pandas
@@ -927,13 +918,7 @@ class CrawlEngine:
         else:
             blobs = self.t("seen_set").read()
         claimed, changed_blobs = self._bloom.claim_new(keyed, blobs)
-        new_rows = (
-            claimed
-            .withColumn("status", F.lit(S.STATUS_TODO))
-            .select(*self._frontier_cols())
-            .observe(obs, F.count(F.lit(1)).alias("n_new"))
-            .persist()
-        )
+        it.new_rows = frontier_rows(claimed)
 
         def commit_fn(n_bound, iteration):
             # dynamic partition overwrite of ONLY the buckets whose bits
@@ -946,7 +931,7 @@ class CrawlEngine:
                     meta={"bucket_modulus": self.cfg.bloom_buckets},
                 )
 
-        return new_rows, commit_fn, obs, None
+        it.seen_commit = commit_fn
 
     def _item_bucket_col(self) -> F.Column:
         """Placement bucket for the items table — a pure function of item_fp,
@@ -990,9 +975,10 @@ class CrawlEngine:
         dirs — per-iteration items I/O ∝ batch buckets, never O(table).
         Below it the whole (small) table is cheaper than the extra job."""
         items_t = self.t("items")
-        if not self._items_pruning_safe():
-            return items_t.read().select("item_fp")
-        if items_t.leaf_partition_count() > self.cfg.items_prune_min_leaf_parts:
+        if (
+            self._items_pruning_safe()
+            and items_t.leaf_partition_count() > self.cfg.items_prune_min_leaf_parts
+        ):
             touched = [
                 r[0]
                 for r in item_rows.select(self._item_bucket_col().alias("b"))
@@ -1041,49 +1027,58 @@ class CrawlEngine:
         return ckpt
 
     def _iterate(self) -> IterationStats | None:
-        _t0 = _time.time()
-        cfg = self.cfg
-        budgets = self._iteration_budgets()
-        # band-pruned lease read: the top-k lease provably lives in the
-        # lowest-priority bands whose visible counts cover batch_size — open
-        # only those dirs (adds AND tombstones).  The politeness-GATED path
-        # (host budgets / robots / token buckets) opens bands incrementally:
-        # a gate can promote higher bands, so it probes the eligible count
-        # and widens coverage geometrically until k gated rows are in view
-        # (_gated_lease_inputs) — never an unconditional O(frontier) read.
-        accrued = None
-        bucket_state = None
-        if budgets is None and self._buckets is None:
-            band_keys = self._lease_band_keys(cfg.batch_size)
-            self._last_lease_bands = band_keys
-            due = self._read_frontier_due(band_keys)
-            # the global lease-seq window (bounded, ≤k rows) is NOT applied
-            # here: only the crawl_order audit commit needs seq, so it runs
-            # inside that commit's thread, off the iteration critical path
-            if 0 < self.frontier_size <= cfg.batch_size:
-                # whole-frontier lease (drain phases; production
-                # mega-batches): |due| <= k and no politeness gate, so the
-                # global top-k is the identity on the leased SET — skip the
-                # sort+GlobalLimit funnel that would drag every row through
-                # ONE task before the fetch stage repartitions (the
-                # crawl_order audit still derives seq from its own sort)
-                batch = due.persist()
-            else:
-                batch = FR.take_batch(due, cfg.batch_size).persist()
-        else:
-            due, budgets, accrued, bucket_state, band_keys, bcast_ok = (
-                self._gated_lease_inputs(cfg.batch_size, budgets)
-            )
-            self._last_lease_bands = band_keys
-            batch = FR.take_batch(
-                due, cfg.batch_size, budgets, self._default_budget,
-                self._budget_cap(), bcast_ok,
-            ).persist()
+        """One crawl iteration as its named phases, in Spark-job order: lease
+        → fetch+parse and the outcome aggregate → link claim → failure
+        routing → items → commit+checkpoint → maintain.  The phases hand
+        their frames along in one ``_Iteration`` record, whose ``finally``
+        release unpersists every frame the iteration cached."""
+        it = _Iteration()
+        try:
+            self._lease(it)
+            self._fetch_outcome(it)
+            if it.st.leased == 0:
+                return self._idle_tick(it.st)
+            self._claim_links(it)
+            self._route_failures(it)
+            self._items(it)
+            st = self._commit(it)
+        finally:
+            it.release()
+            if self._bloom is not None:
+                self._bloom.release()
+        self._maintain()
+        return st
 
-        # fused fetch+parse: one python eval per task (fetcher.py rationale)
-        # host-grouped partitioning only matters when per-host rate limits
-        # exist; otherwise round-robin balances perfectly (no host-hash skew)
-        fetch_input = batch
+    def _lease(self, it: _Iteration) -> None:
+        """Lease phase: the politeness-gated top-k of the visible due
+        frontier (band-pruned, _lease_inputs), persisted as ``it.batch``.
+        The global lease-seq window (bounded, ≤k rows) is NOT applied here:
+        only the crawl_order audit commit needs seq, so it runs inside that
+        commit's thread, off the iteration critical path."""
+        cfg = self.cfg
+        it.budgets = self._iteration_budgets()
+        due, self._last_lease_bands, bcast_ok = self._lease_inputs(it, cfg.batch_size)
+        if it.budgets is None and 0 < self.frontier_size <= cfg.batch_size:
+            # whole-frontier lease (drain phases; production mega-batches):
+            # |due| <= k and no politeness gate, so the global top-k is the
+            # identity on the leased SET — skip the sort+GlobalLimit funnel
+            # that would drag every row through ONE task before the fetch
+            # stage repartitions (the crawl_order audit still derives seq
+            # from its own sort)
+            batch = due
+        else:
+            batch = FR.take_batch(
+                due, cfg.batch_size, it.budgets, self._default_budget,
+                self._budget_cap(), bcast_ok,
+            )
+        it.batch = it.keep(batch)
+
+    def _fetch_outcome(self, it: _Iteration) -> None:
+        """Fetch phase: the fused fetch+parse of the batch (one python eval
+        per task, fetcher.py rationale), persisted as ``it.fetched``, and
+        ONE rollup job for its outcome counts."""
+        cfg = self.cfg
+        fetch_input = it.batch
         if cfg.user_agent_rotation:
             # P13: deterministic UA column (hash-rotated, JVM-side) rides the
             # batch into the fetch stage for a real HTTP pool to consume
@@ -1095,9 +1090,12 @@ class CrawlEngine:
                 F.col("content").alias("cached_content"),
             )
             fetch_input = fetch_input.join(cache, on="fingerprint", how="left")
-        fetched = fetch_parse_batch(
+        it.fetched = it.keep(fetch_parse_batch(
             fetch_input,
             self.resolver,
+            # host-grouped partitioning only matters when per-host rate
+            # limits exist; otherwise round-robin balances perfectly (no
+            # host-hash skew)
             by_host=cfg.politeness is not None or cfg.respect_robots or self._buckets is not None,
             use_cache=cfg.use_fetch_cache,
             validate=cfg.validate,
@@ -1106,8 +1104,7 @@ class CrawlEngine:
             parsers=cfg.parsers,
             callbacks=cfg.callbacks,
             download_midware=cfg.download_midware,
-        ).persist()
-        parsed = fetched.filter(F.col("status_code") == 200)
+        ))
 
         # ONE aggregation job covers lease count + fetch outcome + retry
         # routing + link counts — it is also the action that materializes the
@@ -1121,7 +1118,7 @@ class CrawlEngine:
         # aggregation + metrics_partitions write job are folded away; the
         # lineage rows (≤ parallelism ints) travel in the checkpoint label
         # and materialize at flush_metrics, like the metrics table
-        agg_rows = fetched.rollup("stage_partition").agg(
+        agg_rows = it.fetched.rollup("stage_partition").agg(
             # leased counts batch rows only — request_sync rows are executed
             # inline (never queued), so they appear in fetched but are not
             # leases (no tombstone, no crawl_order seq)
@@ -1140,57 +1137,55 @@ class CrawlEngine:
             ),
         ).collect()
         # an EMPTY batch yields zero rollup rows (plain agg would give one
-        # all-NULL row) — synthesize the zero outcome for the drain check
-        frow = next(
-            (r for r in agg_rows if r["stage_partition"] is None),
-            {"leased": 0, "ok": 0, "retried": 0, "failed": 0,
-             "links_total": 0, "cache_new": 0},
-        )
-        part_metric_rows = [
-            [self.iteration, "fetch_parse", int(r["stage_partition"]), int(r["n_rows"])]
-            for r in agg_rows
-            if r["stage_partition"] is not None
-        ]
-        _t_agg = _time.time()
-        leased = int(frow["leased"] or 0)
-        if leased == 0:
-            batch.unpersist()
-            fetched.unpersist()
-            if accrued is not None:
-                accrued.unpersist()
-            if (
-                self._buckets is not None
-                and self._buckets.rate > 0
-                and self.frontier_size > 0
-            ):
-                # idle-accrual tick: due rows exist but every host is out of
-                # tokens — advance the iteration so buckets refill (the
-                # reference's collector just sleeps, collector.py:57-61).
-                # Bucket state is NOT committed, so elapsed-iterations accrual
-                # covers the idle gap (politeness.TokenBuckets.accrue).
-                st = IterationStats(self.iteration, 0, 0, 0, 0, 0, 0)
-                self.iteration += 1
-                self.store.checkpoint(self._label(stats=st.__dict__), TABLES)
-                return st
-            return None
-        fetched_ok = int(frow["ok"] or 0)
-        retried_n = int(frow["retried"] or 0)
-        failed_n = int(frow["failed"] or 0)
-        links_total = int(frow["links_total"] or 0)
+        # all-NULL row) — the counts then stay zero for the drain check
+        it.st = IterationStats(self.iteration, 0, 0, 0, 0, 0, 0)
+        for r in agg_rows:
+            if r["stage_partition"] is not None:
+                it.part_metrics.append(
+                    [self.iteration, "fetch_parse", int(r["stage_partition"]), int(r["n_rows"])]
+                )
+            else:
+                it.st.leased = int(r["leased"] or 0)
+                it.st.fetched_ok = int(r["ok"] or 0)
+                it.st.retried = int(r["retried"] or 0)
+                it.st.failed = int(r["failed"] or 0)
+                it.links_total = int(r["links_total"] or 0)
+                it.cache_new = int(r["cache_new"] or 0) if cfg.use_fetch_cache else 0
 
-        # --- discovered links → claim-on-enqueue dedup ---
+    def _idle_tick(self, st: IterationStats) -> IterationStats | None:
+        """An empty lease.  None (the frontier drained) unless due rows
+        exist but every host is out of tokens: then an idle-accrual tick
+        advances the iteration so buckets refill (the reference's
+        collector just sleeps, collector.py:57-61).  Bucket state is NOT
+        committed, so elapsed-iterations accrual covers the idle gap
+        (politeness.TokenBuckets.accrue)."""
+        if self._buckets is None or self._buckets.rate <= 0 or self.frontier_size <= 0:
+            return None
+        self.iteration += 1
+        self.store.checkpoint(self._label(stats=st.__dict__), TABLES)
+        return st
+
+    def _claim_links(self, it: _Iteration) -> None:
+        """Link-claim phase: the parsed pages' outlinks, claim-on-enqueue
+        deduped against the seen set into ``it.new_rows``; the seen write
+        itself waits for the commit phase (``it.seen_commit``)."""
+        cfg = self.cfg
+        if it.links_total == 0:
+            # zero candidate links: skip the dedup machinery entirely — no
+            # seen read, no Bloom blobs read/cogroup, no seen commit (the
+            # bloom path's fixed per-iteration Arrow cost drops to nothing
+            # on link-less iterations)
+            it.new_rows = it.keep(self.spark.createDataFrame([], FR.FRONTIER_DDL))
+            return
         # TTL mode appends at version iteration+1: a link may RE-claim a
         # fingerprint leased in THIS batch (its seen claim expired), and the
         # re-add must not share the row-version key the lease tombstone just
         # wrote — iteration+1 is provably unused (no visible row can carry a
         # future iteration).  Without TTL a leased fp can never re-claim, so
         # the plain current-iteration version stays pinned.
-        ttl_mode = (
-            cfg.seen_ttl_iterations is not None or cfg.seen_ttl_seconds is not None
-        )
-        add_ver = self.iteration + 1 if ttl_mode else self.iteration
+        add_ver = self.iteration + 1 if self._ttl_mode else self.iteration
         cands = (
-            link_candidates_fused(parsed)
+            link_candidates_fused(it.parsed)
             .withColumn("priority", F.lit(cfg.link_priority))
             .withColumn("retry_times", F.lit(0))
             .withColumn("parser_name", F.coalesce(F.col("parser_name"), F.lit(cfg.default_parser)))
@@ -1199,71 +1194,53 @@ class CrawlEngine:
             .withColumn("payload", F.lit(None).cast("map<string,string>"))
             .withColumn("auto_request", F.coalesce(F.col("auto_request"), F.lit(True)))
         )
-        kept_obs = None
-        if links_total > 0:
-            if cfg.respect_robots:
-                # count the robots survivors as a free by-product of the same
-                # commit job, so robots-dropped links stop inflating links_dup
-                kept_obs = Observation()
-                cands = self._apply_robots(cands).observe(
-                    kept_obs, F.count(F.lit(1)).alias("n_kept")
-                )
-            new_rows, seen_commit, links_obs, stale = self._claim_new(
-                cands, add_version=add_ver
+        if cfg.respect_robots:
+            # count the robots survivors as a free by-product of the same
+            # commit job, so robots-dropped links stop inflating links_dup
+            it.kept_obs = Observation()
+            cands = self._apply_robots(cands).observe(
+                it.kept_obs, F.count(F.lit(1)).alias("n_kept")
             )
-        else:
-            # zero candidate links: skip the dedup machinery entirely — no
-            # seen read, no Bloom blobs read/cogroup, no seen commit (the
-            # bloom path's fixed per-iteration Arrow cost drops to nothing
-            # on link-less iterations)
-            new_rows = self.spark.createDataFrame([], FR.FRONTIER_DDL).persist()
-            seen_commit = lambda n_bound, iteration: None  # noqa: E731
-            links_obs, stale = None, None
         # links_new is NOT counted here — it arrives via the Observation as a
         # by-product of the commit job that materializes new_rows (one fewer
-        # driver job per iteration); until then use links_total as the bound
-        n_stale = 0
-        if stale is not None and links_total > 0:
+        # driver job per iteration); until then links_total is the bound
+        self._claim_new(it, cands, add_version=add_ver)
+        if it.stale is not None:
             # TTL mode only: count+persist the stale visible rows a re-claim
             # shadows (bounded by the re-claimed links, usually ~0).  Rows
             # ALSO leased in this batch are excluded: the lease tombstone
             # already covers them, and a duplicate stale tombstone would
             # decrement frontier_size twice — the undercount could wrongly
             # satisfy the whole-frontier fast path and over-lease
-            stale = stale.join(
-                batch.select("fingerprint", "retry_times", "added_iteration"),
-                on=["fingerprint", "retry_times", "added_iteration"],
-                how="left_anti",
-            ).persist()
-            n_stale = stale.count()
-            if n_stale == 0:
-                stale.unpersist()
+            key = _cols(TOMBS_DDL)
+            it.stale = it.keep(it.stale.join(it.batch.select(*key), on=key, how="left_anti"))
+            it.n_stale = it.stale.count()
 
-        # --- retry / failed routing ---
-        failures = fetched.filter(not_ok)
-        fail_src = failures.select(*self._frontier_cols(), "status_code")
-        routed_persisted = False
+    def _route_failures(self, it: _Iteration) -> None:
+        """Routing phase: non-200 rows become retries (``it.retries``, back
+        to the frontier) or terminal failures (``it.failed_new``)."""
+        cfg = self.cfg
+        fail_src = it.fetched.filter(F.col("status_code") != 200).select(
+            *_cols(FR.FRONTIER_DDL), "status_code"
+        )
         if cfg.exception_request is not None or cfg.failed_request is not None:
             # user hooks may transform requests or flip routing, so the
             # route counts come from the routed frame, not the fetch agg
-            routed = route_failures_hooked(
+            routed = it.keep(route_failures_hooked(
                 fail_src, cfg.max_retries, cfg.exception_request, cfg.failed_request
-            ).persist()
-            routed_persisted = True
+            ))
             counts = {r["route"]: r["n"] for r in routed.groupBy("route").agg(F.count(F.lit(1)).alias("n")).collect()}
-            retried_n = int(counts.get(S.STATUS_TODO, 0))
-            failed_n = int(counts.get(S.STATUS_FAILED, 0))
+            it.st.retried = int(counts.get(S.STATUS_TODO, 0))
+            it.st.failed = int(counts.get(S.STATUS_FAILED, 0))
         else:
             routed = FR.route_failures(fail_src, cfg.max_retries)
-        retries = routed.filter(F.col("route") == S.STATUS_TODO).select(*self._frontier_cols())
-        failed_new = routed.filter(F.col("route") == S.STATUS_FAILED).select(
-            "fingerprint", "url", "url_canon", "host", "priority", "parser_name",
-            "retry_times", "status_code", "method", "payload", "callback",
-            "auto_request",
-        )
+        it.retries = routed.filter(F.col("route") == S.STATUS_TODO).select(*_cols(FR.FRONTIER_DDL))
+        it.failed_new = routed.filter(F.col("route") == S.STATUS_FAILED).select(*_cols(FAILED_DDL))
 
-        # --- items (export-then-commit-fingerprint, item_buffer.py:351-358) ---
-        item_rows = parsed.select(
+    def _items(self, it: _Iteration) -> None:
+        """Items phase (export-then-commit-fingerprint,
+        item_buffer.py:351-358): the parsed pages' items not yet exported."""
+        item_rows = it.parsed.select(
             F.col("fingerprint").alias("doc_id"),
             F.col("url_canon").alias("url"),
             "title",
@@ -1273,25 +1250,19 @@ class CrawlEngine:
         # batch's item_fp buckets (and only the item_fp column — parquet
         # projection pruning), so per-iteration read bytes track the batch,
         # not the accumulated items table
-        items_new = item_rows.join(
+        it.items_new = item_rows.join(
             self._items_seen_side(item_rows), on="item_fp", how="left_anti"
-        ).select("item_fp", "doc_id", "url", "title", "n_spans")
+        ).select(*_cols(ITEMS_DDL))
 
-        # --- commits; the CHECKPOINT (not commit order) is the atomicity
-        # gate — restore rolls every table back to the last complete
-        # checkpoint, so the independent table commits run concurrently
-        # (Spark schedules jobs from multiple driver threads in parallel);
-        # empty frames skip their commit entirely.
+    def _commit_jobs(self, it: _Iteration) -> list:
+        """The iteration's table writes, one callable per pool thread;
+        empty frames skip their commit entirely."""
         # frontier delta: append the new/retry rows and tombstone the leased
         # row versions — O(batch) write bytes, never an O(frontier) rewrite
-        additions = retries.unionByName(new_rows)
-        tombstones = batch.select(
-            "fingerprint", "retry_times", "added_iteration", "priority"
-        )
-        if n_stale:
-            tombstones = tombstones.unionByName(stale)
-        self.tombstone_rows += leased + n_stale
-
+        additions = it.retries.unionByName(it.new_rows)
+        tombstones = it.batch.select(*_cols(TOMBS_DDL), "priority")
+        if it.n_stale:
+            tombstones = tombstones.unionByName(it.stale)
         # links_new > 0 requires candidates, i.e. links_total > 0; the
         # additions commit is the job that materializes new_rows and fires
         # the links Observation.  The seen commit scans the SAME persisted
@@ -1299,44 +1270,42 @@ class CrawlEngine:
         # thread, so the first job materializes the cache and the second
         # reads it hot, instead of two concurrent jobs both computing the
         # multi-million-row candidate dedup before the cache exists.
-        may_have_new = links_total > 0
-        if retried_n > 0 or may_have_new:
-            def _adds_then_seen():
-                self._commit_frontier_adds(additions, retried_n + links_total)
-                seen_commit(links_total, self.iteration)
+        def adds_then_seen():
+            if it.st.retried > 0 or it.links_total > 0:
+                self._commit_frontier_adds(additions, it.st.retried + it.links_total)
+            it.seen_commit(it.links_total, self.iteration)
 
-            commits = [_adds_then_seen]
-        else:
-            commits = [lambda: seen_commit(links_total, self.iteration)]
-        commits.append(
-            lambda: self._commit_frontier_tombs(tombstones, leased + n_stale)
-        )
-        if fetched_ok > 0:
-            commits.append(
+        jobs = [
+            adds_then_seen,
+            lambda: self._commit_banded(
+                "frontier_tombs", tombstones, it.st.leased + it.n_stale, "append"
+            ),
+        ]
+        if it.st.fetched_ok > 0:
+            jobs.append(
                 # span docs are wide (~10 KB/row): size for ~200 MB files,
                 # not the 100k-rows default meant for slim rows
                 lambda: self.t("docs").commit(
-                    self._sized(docs_from_fused(parsed), fetched_ok, rows_per_file=20_000),
+                    self._sized(docs_from_fused(it.parsed), it.st.fetched_ok, rows_per_file=20_000),
                     mode="append",
                 )
             )
-            commits.append(
+            jobs.append(
                 # bucket-aligned placement: shuffle_to colocates each ib
                 # bucket's rows so the hive write emits ~1 file per bucket,
                 # not input-partitions x buckets
                 lambda: self.t("items").commit_append_partitioned(
-                    items_new.withColumn("ib", self._item_bucket_col()),
+                    it.items_new.withColumn("ib", self._item_bucket_col()),
                     "ib",
                     meta=self._items_meta(),
-                    shuffle_to=max(1, min(self.spark.sparkContext.defaultParallelism,
-                                          fetched_ok // 100_000 + 1)),
+                    shuffle_to=self._target(it.st.fetched_ok),
                 )
             )
-        if failed_n > 0:
-            commits.append(
-                lambda: self.t("failed").commit(self._sized(failed_new, failed_n), mode="append")
+        if it.st.failed > 0:
+            jobs.append(
+                lambda: self.t("failed").commit(self._sized(it.failed_new, it.st.failed), mode="append")
             )
-        commits.append(
+        jobs.append(
             # the global lease-seq derivation runs here, inside the commit
             # thread (concurrent with the big docs/frontier writes).  Only
             # the lease-order columns ride into it — seq needs (priority,
@@ -1345,158 +1314,98 @@ class CrawlEngine:
             lambda: self.t("crawl_order").commit(
                 self._sized(
                     FR.with_lease_seq(
-                        batch.select(*S.ORDER_COLS), self.next_seq, n_rows=leased
+                        it.batch.select(*S.ORDER_COLS), self.next_seq, n_rows=it.st.leased
                     ).select(
                         "seq", F.lit(self.iteration).alias("iteration"), "fingerprint"
                     ),
-                    leased,
+                    it.st.leased,
                 ),
                 mode="append",
             )
         )
-        if accrued is not None:
-            leased_ph = batch.groupBy("host").agg(F.count("*").alias("n_leased"))
-            spent = self._buckets.spend(accrued, leased_ph)
+        if it.accrued is not None:
+            leased_ph = it.batch.groupBy("host").agg(F.count("*").alias("n_leased"))
+            spent = self._buckets.spend(it.accrued, leased_ph)
             # persist-state semantics: rows for hosts NOT accrued this
             # iteration (outside the opened bands, or momentarily without
             # due rows) carry forward untouched — elapsed-iterations
             # accrual catches them up exactly when next read, because
             # min(burst, t + m·rate) composes across skipped iterations
             # (oracle.py mirrors; required for the band-pruned gated lease)
-            carry = bucket_state.join(accrued.select("host"), on="host", how="left_anti")
+            carry = it.bucket_state.join(it.accrued.select("host"), on="host", how="left_anti")
             # prune rows whose as-of value has refilled to burst — they are
             # exactly the absent-host default, so dropping them is
             # behavior-invisible and keeps the overwritten state table
             # O(still-refilling hosts), not O(every host ever crawled)
             new_state = self._buckets.prune(spent.unionByName(carry), self.iteration)
-            commits.append(
+            jobs.append(
                 lambda: self.t("token_buckets").commit(self._sized(new_state, 10_000), mode="overwrite")
             )
-        if cfg.use_fetch_cache and int(frow["cache_new"] or 0) > 0:
-            cache_rows = fetched.filter(F.col("content").isNotNull()).select(
+        if it.cache_new > 0:
+            cache_rows = it.fetched.filter(F.col("content").isNotNull()).select(
                 "fingerprint", "status_code", "content"
             )
-            commits.append(
+            jobs.append(
                 lambda: self.t("fetch_cache").commit(
-                    self._sized(cache_rows, int(frow["cache_new"])), mode="append"
+                    self._sized(cache_rows, it.cache_new), mode="append"
                 )
             )
-        _t_pre = _time.time()
-        with ThreadPoolExecutor(max_workers=len(commits)) as pool:
-            for fut in [pool.submit(c) for c in commits]:
+        return jobs
+
+    def _commit(self, it: _Iteration) -> IterationStats:
+        """Commit phase.  The CHECKPOINT (not commit order) is the atomicity
+        gate — restore rolls every table back to the last complete
+        checkpoint, so the independent table commits run concurrently
+        (Spark schedules jobs from multiple driver threads in parallel);
+        the driver counters advance only once every commit succeeded."""
+        jobs = self._commit_jobs(it)
+        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+            for fut in [pool.submit(j) for j in jobs]:
                 fut.result()  # propagate any commit failure before checkpointing
-        _t_commits = _time.time()
-        if self._bloom is not None:
-            self._bloom.release()
         # the Observation fired inside whichever commit materialized new_rows
         # (the seen commit consumes it when candidates existed); with zero
         # candidate links, links_new is definitionally zero.  When a cache
         # race swallows the metrics (both consumers read an InMemoryScan and
         # neither query surfaces the inner CollectMetrics), fall back to a
         # count over the now-hot cache — correctness never depends on obs.
-        links_new = 0
-        links_dropped = 0
-        if may_have_new:
+        st = it.st
+        if it.links_total > 0:
             try:
-                links_new = int(links_obs.get["n_new"])
+                st.links_new = int(it.links_obs.get["n_new"])
             except Exception:
                 self._obs_fallbacks += 1
-                links_new = new_rows.count()
-            if kept_obs is not None:
+                st.links_new = it.new_rows.count()
+            if it.kept_obs is not None:
                 try:
-                    links_dropped = links_total - int(kept_obs.get["n_kept"])
+                    st.links_dropped = it.links_total - int(it.kept_obs.get["n_kept"])
                 except Exception:
                     self._obs_fallbacks += 1
-        self.frontier_size = self.frontier_size - leased + retried_n + links_new - n_stale
-        st = IterationStats(
-            iteration=self.iteration,
-            leased=leased,
-            fetched_ok=fetched_ok,
-            links_new=links_new,
-            links_dup=links_total - links_dropped - links_new,
-            retried=retried_n,
-            failed=failed_n,
-            links_dropped=links_dropped,
-        )
+        st.links_dup = it.links_total - st.links_dropped - st.links_new
+        self.frontier_size += st.retried + st.links_new - st.leased - it.n_stale
+        self.tombstone_rows += st.leased + it.n_stale
         self.iteration += 1
-        self.next_seq += leased
+        self.next_seq += st.leased
         # iteration summary + per-partition lineage travel in the checkpoint
         # label (no Spark job); the metrics/metrics_partitions tables are
         # materialized from the labels at end of run()
         self.store.checkpoint(
-            self._label(stats=st.__dict__, part_metrics=part_metric_rows), TABLES
+            self._label(stats=st.__dict__, part_metrics=it.part_metrics), TABLES
         )
-        if _TRACE:
-            _t_end = _time.time()
-            print(
-                f"TRACE iter={st.iteration} agg={_t_agg - _t0:.2f} "
-                f"route+plan={_t_pre - _t_agg:.2f} commits={_t_commits - _t_pre:.2f} "
-                f"obs+ckpt={_t_end - _t_commits:.2f} total={_t_end - _t0:.2f}",
-                flush=True,
-            )
-
-        for df in (batch, fetched, new_rows):
-            df.unpersist()
-        if n_stale:
-            stale.unpersist()
-        if routed_persisted:
-            routed.unpersist()
-        if accrued is not None:
-            accrued.unpersist()
-        m_adds = self.t("frontier").manifest()
-        if self.tombstone_rows >= max(self.cfg.compact_min_tombstones, self.frontier_size):
-            self.compact_frontier()
-        elif m_adds is not None and len(m_adds.segments or []) >= self.cfg.compact_min_segments:
-            # segment-count trigger: on a huge frontier the tombstone
-            # threshold fires rarely while per-band file counts grow every
-            # iteration — fold them independently.  With the minor fold
-            # below at its default this backstop is rarely reached.
-            self.compact_frontier()
-        elif self.cfg.fold_min_segments is not None:
-            # minor fold: bounds BOTH delta logs' file counts every
-            # iteration without the full O(visible) rewrite — the fold is a
-            # row-identical single-table commit, so no checkpoint is needed
-            # (a rollback across it is a no-op) and a crash between the two
-            # folds leaves each table individually consistent
-            self.t("frontier").fold_segments(self.cfg.fold_min_segments)
-            self.t("frontier_tombs").fold_segments(self.cfg.fold_min_segments)
-        if self.cfg.fold_min_segments is not None:
-            # the OTHER per-iteration-read append logs: exact-mode seen
-            # (anti-join right side + TTL expiry, one segment per
-            # iteration forever — the 560-iteration soak measured this as
-            # the residual linear drift once the frontier logs were
-            # bounded) and the response cache.  Size-capped like items:
-            # both grow without a compaction reset, so full-sized fold
-            # outputs must be exempt for the pause to stay bounded.
-            # docs/crawl_order/failed also grow but are not read in-loop —
-            # their folding stays out-of-band maintenance.
-            self.t("seen").fold_segments(
-                self.cfg.fold_min_segments,
-                max_fold_bytes=self.cfg.items_fold_max_bytes,
-            )
-            self.t("fetch_cache").fold_segments(
-                self.cfg.fold_min_segments,
-                max_fold_bytes=self.cfg.items_fold_max_bytes,
-            )
-        if self.cfg.items_fold_min_segments is not None:
-            # size-capped bin-pack: bounds the items table's file count
-            # without the O(table) rewrite (full-sized fold outputs are
-            # exempt, so the pause is bounded by the byte cap at any scale)
-            self.t("items").fold_segments(
-                self.cfg.items_fold_min_segments,
-                max_fold_bytes=self.cfg.items_fold_max_bytes,
-            )
-        if self.cfg.items_compact_min_segments is not None:
-            # opt-in ONLY: unlike the frontier fold (bounded by the delta
-            # log) this rewrites the whole items table — out-of-band
-            # maintenance by default (cfg.items_compact_min_segments)
-            m_items = self.t("items").manifest()
-            if (
-                m_items is not None
-                and len(m_items.segments or []) >= self.cfg.items_compact_min_segments
-            ):
-                self.compact_items()
         return st
+
+    def _maintain(self) -> None:
+        """Maintain phase: the one in-loop maintenance policy (FOLDED_LOGS,
+        COMPACT_MIN_TOMBSTONES).  A fold is a row-identical single-table
+        commit, so it needs no checkpoint (a rollback across it is a no-op)
+        and a crash between two folds leaves each table individually
+        consistent.  docs, crawl_order and failed also grow but are not
+        read in-loop: folding them, like compact_items, stays out-of-band."""
+        if self.tombstone_rows >= max(COMPACT_MIN_TOMBSTONES, self.frontier_size):
+            self.compact_frontier()
+        for name in FOLDED_LOGS:
+            self.t(name).fold_segments(
+                self.cfg.fold_min_segments, max_fold_bytes=TARGET_FILE_BYTES
+            )
 
     def expire_snapshots(self, keep_checkpoints: int = 2) -> dict:
         """Storage GC (Iceberg expire_snapshots parity): drop table versions
@@ -1510,10 +1419,7 @@ class CrawlEngine:
         visible, tombstones := ∅.  The visible set is unchanged (pure
         maintenance, like Iceberg rewrite_data_files), so crawl semantics
         are unaffected; runs when tombstones outgrow the visible frontier."""
-        visible = self._read_frontier()
-        self._commit_frontier_adds(visible, self.frontier_size, mode="overwrite")
-        self._commit_frontier_tombs(self._empty_tombs(), 0, mode="overwrite")
-        self.tombstone_rows = 0
+        self._rewrite_frontier(self._read_frontier(), self.frontier_size)
         self.store.checkpoint(self._label(compacted=True), TABLES)
 
     def compact_items(self) -> None:
@@ -1582,7 +1488,7 @@ class CrawlEngine:
             failed.withColumn("retry_times", F.lit(0))
             .withColumn("status", F.lit(S.STATUS_TODO))
             .withColumn("added_iteration", F.lit(self.iteration))
-            .select(*self._frontier_cols())
+            .select(*_cols(FR.FRONTIER_DDL))
         )
         self.frontier_size += n
         self._commit_frontier_adds(revived, n)
@@ -1601,14 +1507,8 @@ class CrawlEngine:
         prows = []
         for ckpt in self.store.list_checkpoints():
             stx = ckpt["label"].get("stats")
-            if stx:
-                rows.append(
-                    (
-                        stx["iteration"], stx["leased"], stx["fetched_ok"], stx["links_new"],
-                        stx["links_dup"], stx.get("links_dropped", 0), stx["retried"],
-                        stx["failed"],
-                    )
-                )
+            if stx:  # links_dropped is absent from older labels
+                rows.append(tuple(stx.get(c, 0) for c in _cols(METRICS_DDL)))
             prows.extend(tuple(p) for p in ckpt["label"].get("part_metrics", []))
         if rows:
             self.t("metrics").commit(self.spark.createDataFrame(rows, METRICS_DDL), mode="overwrite")

@@ -72,7 +72,7 @@ def run_oracle(
     # elapsed-iterations accrual when next due — min(burst, t + m·rate)
     # composes, so lazy catch-up equals per-iteration accrual.  This
     # persist-state contract is what lets the engine accrue over only the
-    # opened frontier bands (engine._gated_lease_inputs) and stay exact.
+    # opened frontier bands (engine._lease_inputs) and stay exact.
     bucket_state: dict[str, tuple[float, int]] = {}
 
     def enqueue(

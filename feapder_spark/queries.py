@@ -988,7 +988,7 @@ def frontier_band_counts(spark, sf_dir):
 def frontier_gated_band_cover(spark, sf_dir):
     """Per-band ELIGIBLE counts under a per-host politeness budget, plus the
     band prefix a gated k-lease must open — the semantic contract behind
-    engine._gated_lease_inputs' incremental band opening (round 5): a row's
+    engine._lease_inputs' incremental band opening (round 5): a row's
     eligibility depends only on same-host rows in its own and lower bands,
     so per-band eligible counts accumulate lowest-band-first, and a band is
     opened iff the cumulative eligible count BEFORE it is still < k.

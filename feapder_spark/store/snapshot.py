@@ -419,8 +419,9 @@ class SnapshotTable:
         single fold costs ≤ max_fold_bytes × n_fold and the segment count
         is bounded by max_segments plus O(table_bytes / max_fold_bytes)
         full-sized outputs — the steady state Iceberg bin-packing reaches.
-        Leave it None for delta logs that a full compaction periodically
-        resets (frontier adds/tombs).
+        The crawl engine passes one cap for every log it folds; on a delta
+        log that a full compaction periodically resets (frontier
+        adds/tombs) the cap rarely binds.
 
         Candidate sizes come from the manifest's ``seg_bytes`` stat
         (recorded at commit time — Iceberg's ``file_size_in_bytes``), so

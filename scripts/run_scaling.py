@@ -113,8 +113,9 @@ ratios are if anything slightly overstated.)
 
 
 # Round-5 pinned measurements (soak + anti-join seam) — filled in by the
-# round-5 measurement runs; see scripts/run_soak.py and
-# scripts/measure_antijoin.py for the protocols.
+# round-5 measurement runs; see scripts/run_soak.py for the soak protocol
+# (the anti-join probe script has since been removed; its result stays
+# pinned below).
 ROUND5_SECTION = """## 5. Round-5 notes (measured 2026-08-17, pinned)
 
 - **Compaction soak at the DEFAULT cadence** (VERDICT r4 #8;
@@ -130,7 +131,7 @@ ROUND5_SECTION = """## 5. Round-5 notes (measured 2026-08-17, pinned)
   (tests/test_compaction.py::test_soak_default_cadence_stays_flat drives
   the same script; SPARK_GRAFT_SOAK_ITERS=560 reproduces this full run.)
 - **Visibility anti-join seam closed by a driver-count broadcast hint**
-  (VERDICT r4 #5; scripts/measure_antijoin.py, 2M adds / 1M tombstones —
+  (VERDICT r4 #5; scripts/measure_antijoin.py, since removed; 2M adds / 1M tombstones —
   a delta log HALF tombstones, REST-measured stage shuffle bytes):
   shuffle path 101.8 MB shuffled per visibility read; broadcast path
   **460 B (−100%)**.  Walls statistically par on this one box (1.4-2.1 s
@@ -184,7 +185,7 @@ ROUND5_SECTION = """## 5. Round-5 notes (measured 2026-08-17, pinned)
   commits, interleaved best-of-3): local[32] is 1.61x FASTER than local[8]
   (19.9 s vs 32.0 s, eff 0.403) — no inversion without the loop, so no
   data-volume cliff either.  (c) Per-stage REST trace of the full loop
-  (scripts/trace_fullloop.py, taskSummary quantiles): NO straggler and no
+  (scripts/trace_fullloop.py, since removed; taskSummary quantiles): NO straggler and no
   serialization — every top stage runs all slots with max/median task skew
   <= 1.3 at 32 — but the dominant stage (the fused fetch+parse feeding the
   rollup collect, engine.py rollup agg) consumes 296 CPU-s at 8 workers vs
@@ -339,25 +340,18 @@ def _spawn(kind: str, cpus: int, quick: bool, repeats: int = 1) -> dict:
     ``repeats`` > 1 takes the best (lowest-wall) of N fresh-process runs —
     this VM's background load swings single runs by ±30-60%, and the best
     run is the one that measures the engine rather than a host hiccup.
-
-    Full-loop runs carry SPARK_GRAFT_TRACE=1 so the engine's per-iteration
-    phase walls (agg / route+plan / commits / obs+ckpt) ride back with the
-    result — the trace-attributed breakdown of the fixed cost S.
+    Per-phase walls of a crawl iteration come from the benchmark instead:
+    ``python3 perfbench/run.py --workload crawl_steady --trace 1``.
     """
     import subprocess
 
     args = [sys.executable, os.path.abspath(__file__), "--one", kind, str(cpus)]
     if quick:
         args.append("--quick")
-    env = dict(os.environ)
-    if kind in ("full", "full_shm"):
-        env["SPARK_GRAFT_TRACE"] = "1"
     best = None
     for _ in range(max(1, repeats)):
-        out = subprocess.run(args, capture_output=True, text=True, check=True, env=env)
-        lines = out.stdout.strip().splitlines()
-        r = json.loads(lines[-1])
-        r["trace"] = [ln for ln in lines if ln.startswith("TRACE ")]
+        out = subprocess.run(args, capture_output=True, text=True, check=True)
+        r = json.loads(out.stdout.strip().splitlines()[-1])
         if best is None or r["wall_sec"] < best["wall_sec"]:
             best = r
     return best
@@ -499,9 +493,10 @@ def write_report(result: dict, dp_hosts: int = 600, dp_pages: int = 320) -> None
     canary_start = result["canary"]["start"]
     canary_end = result["canary"]["end"]
     canary = round((canary_start + canary_end) / 2, 1)
-    trace8 = "\n".join(r8.get("trace", [])) or "(no trace captured)"
-    trace32 = "\n".join(r32.get("trace", [])) or "(no trace captured)"
-    trace32s = "\n".join(s32.get("trace", [])) or "(no trace captured)"
+    trace8 = trace32 = trace32s = (
+        "(no trace captured; per-phase walls: "
+        "python3 perfbench/run.py --workload crawl_steady --trace 1)"
+    )
     r_norm = CANARY_REF / canary
 
     os.makedirs("BENCH", exist_ok=True)

@@ -202,12 +202,12 @@ def test_fold_noops_on_partition_mode_and_small_tables(spark, tmp_path):
 def test_engine_fold_bounds_segments_and_preserves_crawl(spark, tmp_path):
     """The in-loop minor fold (cfg.fold_min_segments) bounds BOTH delta
     logs' segment counts across many iterations while leaving the crawl
-    byte-identical to an unfolded run — and the banded lease pruning
-    (manifest part_rows) keeps working across folds."""
+    byte-identical to a run whose default cadence never folds — and the
+    banded lease pruning (manifest part_rows) keeps working across folds."""
     web = SyntheticWeb(n_hosts=2, pages_per_host=6, seed=42)
     ref = CrawlEngine(
         spark, str(tmp_path / "ref"), web,
-        CrawlConfig(batch_size=3, fold_min_segments=None),
+        CrawlConfig(batch_size=3),
     )
     ref.seed(web.seeds(4))
     ref.run(max_iterations=8)
@@ -238,22 +238,21 @@ def test_engine_fold_bounds_segments_and_preserves_crawl(spark, tmp_path):
 
 
 def test_engine_items_fold_bounds_segments_preserves_rows_and_pruning(spark, tmp_path):
-    """The size-capped items fold (cfg.items_fold_min_segments) bounds the
-    items table's segment count in-loop without the opt-in O(table)
+    """The size-capped items fold (cfg.fold_min_segments) bounds the
+    items table's segment count in-loop without the out-of-band O(table)
     compact_items, leaving rows, dedup pruning safety, and bucket-pruned
     reads intact."""
     web = SyntheticWeb(n_hosts=2, pages_per_host=6, seed=42)
     ref = CrawlEngine(
         spark, str(tmp_path / "ref"), web,
-        CrawlConfig(batch_size=3, items_fold_min_segments=None,
-                    items_prune_min_leaf_parts=0),
+        CrawlConfig(batch_size=3, items_prune_min_leaf_parts=0),
     )
     ref.seed(web.seeds(4))
     ref.run(max_iterations=8)
 
     eng = CrawlEngine(
         spark, str(tmp_path / "fold"), web,
-        CrawlConfig(batch_size=3, items_fold_min_segments=3,
+        CrawlConfig(batch_size=3, fold_min_segments=3,
                     items_prune_min_leaf_parts=0),
     )
     eng.seed(web.seeds(4))

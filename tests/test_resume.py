@@ -1,9 +1,12 @@
 """Resume-from-checkpoint: kill after k iterations, restart, final state
 equals the uninterrupted run (SURVEY §5 test plan #3)."""
 
+import pytest
+
 from feapder_spark.crawl.engine import CrawlConfig, CrawlEngine
 from feapder_spark.crawl.oracle import run_oracle
 from feapder_spark.crawl.synthweb import SyntheticWeb
+from feapder_spark.store.snapshot import SnapshotTable
 
 
 def test_resume_equals_uninterrupted(spark, tmp_path):
@@ -71,10 +74,10 @@ def test_compaction_preserves_crawl_equivalence(spark, tmp_path):
     seeds = web.seeds(4)
     golden = run_oracle(web, seeds, batch_size=8)
 
-    cfg = CrawlConfig(batch_size=8, compact_min_tombstones=1)
-    engine = CrawlEngine(spark, str(tmp_path / "wh"), web, cfg)
+    engine = CrawlEngine(spark, str(tmp_path / "wh"), web, CrawlConfig(batch_size=8))
     engine.seed(seeds)
-    engine.run()
+    while engine.run(max_iterations=1):
+        engine.compact_frontier()
     order = [
         r.fingerprint
         for r in engine.t("crawl_order").read().orderBy("seq").select("fingerprint").collect()
@@ -85,3 +88,27 @@ def test_compaction_preserves_crawl_equivalence(spark, tmp_path):
     assert engine.tombstone_rows == 0
     # the compacted adds table IS the visible set (no shadowed rows)
     assert engine.t("frontier").read().count() == engine.frontier().count()
+
+
+def test_failed_commit_releases_iteration_cache(spark, tmp_path, monkeypatch):
+    """A table commit that raises inside an iteration must not leave the
+    iteration's persisted frames (batch, fetched, new rows, ...) cached for
+    the rest of the session."""
+    web = SyntheticWeb(n_hosts=3, pages_per_host=4, seed=42)
+    engine = CrawlEngine(spark, str(tmp_path / "wh"), web, CrawlConfig(batch_size=6))
+    engine.seed(web.seeds(3))
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+
+    orig = SnapshotTable.commit
+
+    def failing_commit(self, *args, **kwargs):
+        if self.name == "docs":
+            raise RuntimeError("injected docs commit failure")
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "commit", failing_commit)
+    with pytest.raises(RuntimeError, match="injected docs commit failure"):
+        engine._iterate()
+    assert cache.isEmpty(), "a failed commit leaked the iteration's cached frames"
